@@ -9,6 +9,10 @@ Stage 2 (warehouse — replaces LoadDataWarehouse.ChatterjeeP.R):
   product_facts CTAS → rep_id key repair → rep_facts CTAS. The repair MUST
   sit between the two fact builds to match the reference's statement order
   (LoadDataWarehouse.ChatterjeeP.R:90-133); encoded here as an explicit DAG.
+  `run_pipeline` returns that DAG lazily, over the XML. `persist_warehouse`
+  builds each table from the tables persisted before it: the fact builds
+  read the persisted star tables, as the reference's stage 2 reads MySQL,
+  and never go back to the XML.
 
 Stage 3 (analytics — replaces AnalyzeData.ChatterjeeP.Rmd):
   verification/analysis queries over the fact tables.
@@ -26,6 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.numeric import money_sum
 from ..sources.xml import read_xml, read_xml_files_ordered
@@ -51,16 +56,22 @@ def load_reps(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _txn_field(df: DataFrame, name: str):
+def _txn_field(df: DataFrame, name: str, dtype: str):
     """Descendant-axis access (`.//cust` etc., LoadXML2DB.ChatterjeeP.R:178-183):
     the field may sit at the record root or nested one level down (the
-    customer sub-element carries cust+country)."""
-    if name in df.columns:
-        return F.col(name)
-    for c, dtype in df.dtypes:
-        if dtype.startswith("struct") and f"{name}:" in dtype:
-            return F.col(f"{c}.{name}")
-    raise ValueError(f"field {name} not found in txn schema: {df.dtypes}")
+    customer sub-element carries cust+country). The schema is merged over
+    all files, so one field can have several locations, each NULL in the
+    files of the other shape: coalesce them all, each cast to `dtype`
+    first so the branches never need a common inferred type."""
+    locs = [name] if name in df.columns else []
+    locs += [
+        f"{f.name}.{name}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, StructType) and name in f.dataType.fieldNames()
+    ]
+    if not locs:
+        raise ValueError(f"field {name} not found in txn schema: {df.dtypes}")
+    return F.coalesce(*(F.col(c).cast(dtype) for c in locs))
 
 
 def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -72,13 +83,13 @@ def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
     """
     raw = read_xml_files_ordered(spark, paths, "txn")
     return raw.select(
-        _txn_field(raw, "txnID").cast("int").alias("txn_id"),
-        _txn_field(raw, "prod").alias("product_name"),
-        _txn_field(raw, "repID").cast("string").alias("rep_id_raw"),
-        _txn_field(raw, "cust").alias("customer_name"),
-        _txn_field(raw, "country").alias("country"),
-        _txn_field(raw, "date").alias("sale_date"),
-        _txn_field(raw, "amount").cast("double").alias("sale_amount"),
+        _txn_field(raw, "txnID", "int").alias("txn_id"),
+        _txn_field(raw, "prod", "string").alias("product_name"),
+        _txn_field(raw, "repID", "string").alias("rep_id_raw"),
+        _txn_field(raw, "cust", "string").alias("customer_name"),
+        _txn_field(raw, "country", "string").alias("country"),
+        _txn_field(raw, "date", "string").alias("sale_date"),
+        _txn_field(raw, "amount", "double").alias("sale_amount"),
         "file_idx",
         "seq",
     )
@@ -176,6 +187,7 @@ def build_rep_facts(salestxn_repaired: DataFrame, reps: DataFrame, products: Dat
 
 @dataclass
 class PharmaWarehouse:
+    txns: DataFrame               # ordered raw txn bag: the dims and salestxn derive from it
     reps: DataFrame
     customers: DataFrame
     products: DataFrame
@@ -197,6 +209,7 @@ def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> Pha
     repaired = repair_rep_ids(salestxn)
     rep_facts = build_rep_facts(repaired, reps, products)               # post-repair
     return PharmaWarehouse(
+        txns=txns,
         reps=reps,
         customers=customers,
         products=products,
@@ -217,44 +230,59 @@ def persist_warehouse(
     real CTAS lifecycle — the reference's dbWriteTable + CREATE TABLE AS
     SELECT persistence, LoadDataWarehouse.ChatterjeeP.R:29-32,90-133).
 
+    Each table is built from the tables persisted before it, in the
+    reference's statement order: reps, customers and products come from
+    `wh`'s lazy plans; salestxn joins `wh.txns` against the re-read products
+    and customers; product_facts, the rep_id repair and rep_facts read only
+    the re-read star tables, as the reference's stage 2 reads MySQL. So the
+    XML is shredded once per dimension write and once for salestxn, and the
+    fact builds scan parquet only.
+
     mode("overwrite") replays the reference's DROP TABLE IF EXISTS +
     CREATE (S10). Summary facts are partitioned by `year`: the analytics
     queries all filter on year, so the layout turns them into
     partition-pruned scans (cheap here, decisive at 100 TB). product_facts
     goes through literal SQL `CREATE TABLE ... PARTITIONED BY ... AS
     SELECT` to exercise the DDL path; the other tables use the equivalent
-    DataFrameWriter.saveAsTable. The returned warehouse is backed entirely
-    by catalog re-reads — callers can verify results survive the round-trip
-    (partition columns migrate to the end of the re-read schema; consumers
-    address columns by name).
+    DataFrameWriter.saveAsTable. The returned warehouse is backed by catalog
+    re-reads, apart from `txns`, which is not a warehouse table and stays
+    `wh.txns` (partition columns migrate to the end of the re-read schema;
+    consumers address columns by name).
     """
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}{loc}")
-    wh.reps.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.reps")
-    wh.customers.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.customers")
-    wh.products.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.products")
-    wh.salestxn.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.salestxn")
 
-    wh.product_facts.createOrReplaceTempView("__pf_src")
+    def save(df: DataFrame, table: str, *partition_by: str) -> DataFrame:
+        writer = df.write.mode("overwrite").format("parquet")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.saveAsTable(f"{database}.{table}")
+        return spark.table(f"{database}.{table}")
+
+    reps = save(wh.reps, "reps")
+    customers = save(wh.customers, "customers")
+    products = save(wh.products, "products")
+    salestxn = save(build_salestxn(wh.txns, products, customers), "salestxn")
+
+    build_product_facts(salestxn, products, customers).createOrReplaceTempView("__pf_src")
     spark.sql(f"DROP TABLE IF EXISTS {database}.product_facts")
     spark.sql(
         f"CREATE TABLE {database}.product_facts USING parquet PARTITIONED BY (year) "
         "AS SELECT product_name, quarter, region, total_sold, year FROM __pf_src"
     )
     spark.catalog.dropTempView("__pf_src")
-    wh.rep_facts.write.mode("overwrite").format("parquet").partitionBy("year").saveAsTable(
-        f"{database}.rep_facts"
-    )
+    repaired = repair_rep_ids(salestxn)
+    rep_facts = save(build_rep_facts(repaired, reps, products), "rep_facts", "year")
 
-    salestxn = spark.table(f"{database}.salestxn")
     return PharmaWarehouse(
-        reps=spark.table(f"{database}.reps"),
-        customers=spark.table(f"{database}.customers"),
-        products=spark.table(f"{database}.products"),
+        txns=wh.txns,
+        reps=reps,
+        customers=customers,
+        products=products,
         salestxn=salestxn,
-        salestxn_repaired=repair_rep_ids(salestxn),
+        salestxn_repaired=repaired,
         product_facts=spark.table(f"{database}.product_facts"),
-        rep_facts=spark.table(f"{database}.rep_facts"),
+        rep_facts=rep_facts,
     )
 
 

@@ -24,16 +24,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def read_xml(spark: SparkSession, path: str, row_tag: str) -> DataFrame:
-    """Native distributed XML scan; attributes surface as `_name` columns."""
-    return (
-        spark.read.format("xml")
-        .option("rowTag", row_tag)
-        .option("attributePrefix", "_")
-        .load(path)
-    )
+def read_xml(
+    spark: SparkSession, path: str | list[str], row_tag: str, schema: StructType | None = None
+) -> DataFrame:
+    """Native distributed XML scan; attributes surface as `_name` columns.
+    Without `schema` the reader infers one, which costs a job over every
+    file in `path`; with it the read is lazy."""
+    reader = spark.read.format("xml").option("rowTag", row_tag).option("attributePrefix", "_")
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def read_xml_xpath(
@@ -167,8 +170,12 @@ def read_xml_files_ordered(
 ) -> DataFrame:
     """Read N XML files preserving (file order, record order) as columns.
 
-    Returns the native-reader schema plus `file_idx` (position of the file in
-    `paths`) and `seq` (1-based record position within the file). Record
+    The schema is inferred once, in one job over all of `paths`, and every
+    file is read with it, so N files cost one inference job, not N. Its
+    columns are the union of the files' record shapes (a field one file
+    lacks reads NULL there). Returns that schema plus `file_idx` (position
+    of the file in `paths`) and `seq` (1-based record position within the
+    file). Record
     order relies on monotonically_increasing_id being ascending in document
     order within each file — exact when a file is one split (dimension-scale
     parity mode, ENFORCED below); for multi-split files the per-partition
@@ -176,9 +183,10 @@ def read_xml_files_ordered(
     order, so parity mode refuses rather than silently reordering (pass
     require_single_split=False only when downstream order doesn't matter).
     """
+    schema = read_xml(spark, paths, row_tag).schema
     parts = []
     for i, p in enumerate(paths):
-        df = read_xml(spark, p, row_tag)
+        df = read_xml(spark, p, row_tag, schema)
         if require_single_split:
             n_splits = df.rdd.getNumPartitions()
             if n_splits > 1:

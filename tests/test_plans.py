@@ -326,7 +326,7 @@ def test_semdedup_pairs_join_is_within_cluster(spark, sf_dir):
     assert "SortMergeJoin" not in plan  # the old pair self-join is gone
 
 
-def test_r14_optimization_plan_shapes(spark, sf_dir):
+def test_r14_optimization_plan_shapes(spark, sf_dir, monkeypatch):
     """Pin the r14 plan shapes (OPTIMIZATION_r14.md) so a future round
     cannot silently regress them:
     - cosine_topk streams the corpus through ONE Arrow pass (queries ride
@@ -334,7 +334,10 @@ def test_r14_optimization_plan_shapes(spark, sf_dir):
     - simhash_near_dups reads its PINNED signature proxy, never re-deriving
       the tokenize/signature chain per self-join side (was 4 parquet scans);
     - training_corpus attaches survivors via an ANTI join against the drop
-      set instead of a second full documents scan (4 scans -> 2)."""
+      set instead of a second full documents scan (4 scans -> 2).
+    The shapes are those of the default `local` pin mode, forced here so an
+    ambient SPARK_GRAFT_PIN=table cannot turn the pinned proxy into a scan."""
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "local")
     qs = all_queries()
     plan = _plan(qs["cosine_topk"](spark, sf_dir))
     assert "MapInPandas" in plan

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.plans import pharma_pipeline as pp
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.xml import read_xml_xpath
 
-from .pharma_fixtures import synth_xml_fixtures
+from .pharma_fixtures import QUIRKS_TXNS, synth_xml_fixtures, write_txns_xml
 
 
 @pytest.fixture(scope="module")
@@ -74,6 +74,26 @@ def test_xpath_fallback_matches_native_txns(spark, xml_paths):
     fallback = sorted(tuple(r) for r in fb.collect())
     assert fallback == native
     assert len(fallback) > 0
+
+
+def test_merged_schema_reads_both_record_shapes(spark, tmp_path):
+    """The txn schema is inferred once over all files, so `cust`/`country`
+    exist both at the record root (file 0's shape) and under `customer`
+    (file 1's). Reading the two files together must give each file's rows
+    exactly as reading it alone does."""
+    root_shaped, nested = str(tmp_path / "root.xml"), str(tmp_path / "nested.xml")
+    write_txns_xml(root_shaped, QUIRKS_TXNS[0], nested=False)
+    write_txns_xml(nested, QUIRKS_TXNS[1])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.drop("file_idx").collect())
+
+    both = pp.load_txns_ordered(spark, [root_shaped, nested])
+    for i, path in enumerate([root_shaped, nested]):
+        alone = rows(pp.load_txns_ordered(spark, [path]))
+        assert rows(both.filter(F.col("file_idx") == i)) == alone
+        assert len(alone) == len(QUIRKS_TXNS[i])
+        assert all(None not in r for r in alone)
 
 
 def test_scale_probe_corpus_paths_agree_and_single_scan(spark, tmp_path):
