@@ -3,13 +3,12 @@
 
 The commit protocol's guarantees are unit-proven at thread level
 (tests/test_logstore.py contract matrix, the in-process optimistic-append
-race in tests/test_partitioned_upsert.py) and the arbiter at process
-level; this probe closes the remaining gap END-TO-END: separate Spark
-DRIVERS (own JVMs, own sessions) concurrently committing real delta
-batches to the same state dir through a multi-process store — the
-token-owned FileLock file (SPARK_GRAFT_LOG_STORE=filelock, no external
-service needed) or the remote commit arbiter — each using the
-Delta-style optimistic loop (append_delta_batch_optimistic: next id
+race in tests/test_partitioned_upsert.py); this probe closes the
+remaining gap END-TO-END: separate Spark DRIVERS (own JVMs, own
+sessions) concurrently committing real delta batches to the same state
+dir through the multi-process store — the token-owned FileLock file
+(SPARK_GRAFT_LOG_STORE=filelock) — each using the Delta-style
+optimistic loop (append_delta_batch_optimistic: next id
 from the manifest head, retry on lost race with a refreshed basis).
 Optionally a further MAINTENANCE process runs the housekeeping loop
 (folds/compaction/retention) against the live writers.
@@ -23,11 +22,8 @@ conflict happened). This probe caught three live protocol bugs in r9
 (see SCALE.md's concurrent-writers section).
 
 Usage: python examples/concurrent_writers_probe.py SF_DIR [SLICES_PER_WRITER] [N_WRITERS] [STORE]
-STORE: filelock (default) | arbiter | http — arbiter spins up the
-cross-process commit-arbiter service (streaming/arbiter_server); http
-spins up the r10 network-auth HTTP adapter (streaming/http_arbiter:
-bearer-token service, real sockets) — so ALL multi-process deployment
-paths run the identical racing workload.
+STORE: the SPARK_GRAFT_LOG_STORE every writer process runs under;
+filelock (default) is the store with cross-process exclusion.
 
 SEQ-FENCE mode (r10, VERDICT ask #2):
   python examples/concurrent_writers_probe.py SF_DIR seq [STORE]
@@ -87,39 +83,6 @@ def writer_main() -> None:
             }
         )
     )
-
-
-def _store_env(store: str):
-    """Env + service handle for a multi-process store leg. 'http' runs
-    the r10 network-auth adapter: an authenticated HttpArbiterServer in
-    the parent, every writer process connecting over real sockets
-    (SPARK_GRAFT_LOG_STORE=arbiter + an http:// endpoint selects the
-    HttpCommitArbiter client in arbiter_store_from_env)."""
-    if store == "http":
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.http_arbiter import (
-            HttpArbiterServer,
-        )
-
-        token = f"probe-{os.getpid()}"
-        srv = HttpArbiterServer(token).start()
-        host, port = srv.address
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_LOG_STORE="arbiter",
-            SPARK_GRAFT_ARBITER_ENDPOINT=f"http://{host}:{port}",
-            SPARK_GRAFT_ARBITER_AUTHKEY=token,
-        )
-        return env, srv
-    env = dict(os.environ, SPARK_GRAFT_LOG_STORE=store)
-    if store == "arbiter":
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.arbiter_server import (
-            start_arbiter_server,
-        )
-
-        mgr, (host, port) = start_arbiter_server()
-        env["SPARK_GRAFT_ARBITER_ENDPOINT"] = f"{host}:{port}"
-        return env, mgr
-    return env, None
 
 
 def seq_writer_main() -> None:
@@ -270,95 +233,90 @@ def seq_fence_probe(sf_dir: str, store: str) -> None:
             dirs.append(d)
         slice_dirs[tag] = dirs
 
-    env, mgr = _store_env(store)
+    env = dict(os.environ, SPARK_GRAFT_LOG_STORE=store)
     me = os.path.abspath(__file__)
     t0 = time.monotonic()
     procs = []
-    try:
-        # stagger mode (the default): writer B starts its appends a beat
-        # after A, so A's id-0 commit is on disk and B's rejection goes
-        # through the LEASE check ("owned by writer"), the r10 surface
-        # under test; delay 0/0 (env SPARK_GRAFT_SEQ_STAGGER_S=0) gives
-        # the simultaneous id-0 contest, rejected at the lock/CAS instead
-        stagger = os.environ.get("SPARK_GRAFT_SEQ_STAGGER_S", "120")
-        for tag, delay in (("A", "0"), ("B", stagger)):
-            errlog = open(os.path.join(work, f"seq_{tag}.stderr"), "w")
-            procs.append(
-                (
-                    subprocess.Popen(
-                        [sys.executable, me, "--seq-writer", state, str(width), tag,
-                         delay]
-                        + slice_dirs[tag],
-                        env=env,
-                        stdout=subprocess.PIPE,
-                        stderr=errlog,
-                        text=True,
-                    ),
-                    errlog,
-                )
+    # stagger mode (the default): writer B starts its appends a beat
+    # after A, so A's id-0 commit is on disk and B's rejection goes
+    # through the LEASE check ("owned by writer"), the r10 surface
+    # under test; delay 0/0 (env SPARK_GRAFT_SEQ_STAGGER_S=0) gives
+    # the simultaneous id-0 contest, rejected at the lock/CAS instead
+    stagger = os.environ.get("SPARK_GRAFT_SEQ_STAGGER_S", "120")
+    for tag, delay in (("A", "0"), ("B", stagger)):
+        errlog = open(os.path.join(work, f"seq_{tag}.stderr"), "w")
+        procs.append(
+            (
+                subprocess.Popen(
+                    [sys.executable, me, "--seq-writer", state, str(width), tag,
+                     delay]
+                    + slice_dirs[tag],
+                    env=env,
+                    stdout=subprocess.PIPE,
+                    stderr=errlog,
+                    text=True,
+                ),
+                errlog,
             )
-        outs = []
-        for p, errlog in procs:
-            out, _ = p.communicate(timeout=1200)
-            errlog.close()
-            if p.returncode != 0:
-                raise SystemExit(
-                    f"seq writer {p.pid} crashed rc={p.returncode} (a NON-"
-                    f"fence failure) — see {errlog.name}"
-                )
-            outs.append(json.loads(out.strip().splitlines()[-1]))
-
-        winners = [r for r in outs if not r["fenced"]]
-        losers = [r for r in outs if r["fenced"]]
-        if len(winners) != 1 or len(losers) != 1:
-            raise SystemExit(
-                f"expected exactly one fenced writer, got {outs} — two "
-                "completing producers would mean the silent mis-sequence "
-                "the fence exists to prevent"
-            )
-        if len(winners[0]["commits"]) != n_slices:
-            raise SystemExit(f"winner did not land its whole log: {winners[0]}")
-
-        # TAKEOVER-AFTER-OWNER-DEATH (r11 runbook, SCALE.md): the
-        # winner's PROCESS exited above — the owner is dead and the
-        # lease still fences the table. A THIRD producer claims it the
-        # documented way: takeover=True, batch ids strictly above the
-        # owner's newest, seq continuing above the recorded max_seq.
-        # Runs inside this try so the arbiter/http service is still up.
-        takeover_log = (
-            logs[winners[0]["tag"]]
-            .withColumn("amount", F.col("amount") + 5000)
-            .withColumn("seq", (F.col("seq") + F.lit(n)).cast("long"))
-            .filter(F.col("seq") <= n + 2 * span)  # two slices' worth
         )
-        tdirs = []
-        for j in range(2):
-            d = os.path.join(work, f"T_slice{j}")
-            takeover_log.filter(
-                (F.col("seq") > n + j * span) & (F.col("seq") <= n + (j + 1) * span)
-            ).write.parquet(d)
-            tdirs.append(d)
-        terr = open(os.path.join(work, "seq_T.stderr"), "w")
-        tproc = subprocess.Popen(
-            [sys.executable, me, "--seq-takeover", state, str(width), "T",
-             str(n_slices)] + tdirs,
-            env=env,
-            stdout=subprocess.PIPE,
-            stderr=terr,
-            text=True,
-        )
-        tout, _ = tproc.communicate(timeout=1200)
-        terr.close()
-        if tproc.returncode != 0:
+    outs = []
+    for p, errlog in procs:
+        out, _ = p.communicate(timeout=1200)
+        errlog.close()
+        if p.returncode != 0:
             raise SystemExit(
-                f"takeover writer crashed rc={tproc.returncode} — see {terr.name}"
+                f"seq writer {p.pid} crashed rc={p.returncode} (a NON-"
+                f"fence failure) — see {errlog.name}"
             )
-        trep = json.loads(tout.strip().splitlines()[-1])
-        if trep["commits"] != [n_slices, n_slices + 1]:
-            raise SystemExit(f"takeover writer did not land its batches: {trep}")
-    finally:
-        if mgr is not None:
-            mgr.shutdown()
+        outs.append(json.loads(out.strip().splitlines()[-1]))
+
+    winners = [r for r in outs if not r["fenced"]]
+    losers = [r for r in outs if r["fenced"]]
+    if len(winners) != 1 or len(losers) != 1:
+        raise SystemExit(
+            f"expected exactly one fenced writer, got {outs} — two "
+            "completing producers would mean the silent mis-sequence "
+            "the fence exists to prevent"
+        )
+    if len(winners[0]["commits"]) != n_slices:
+        raise SystemExit(f"winner did not land its whole log: {winners[0]}")
+
+    # TAKEOVER-AFTER-OWNER-DEATH (r11 runbook, SCALE.md): the
+    # winner's PROCESS exited above — the owner is dead and the
+    # lease still fences the table. A THIRD producer claims it the
+    # documented way: takeover=True, batch ids strictly above the
+    # owner's newest, seq continuing above the recorded max_seq.
+    takeover_log = (
+        logs[winners[0]["tag"]]
+        .withColumn("amount", F.col("amount") + 5000)
+        .withColumn("seq", (F.col("seq") + F.lit(n)).cast("long"))
+        .filter(F.col("seq") <= n + 2 * span)  # two slices' worth
+    )
+    tdirs = []
+    for j in range(2):
+        d = os.path.join(work, f"T_slice{j}")
+        takeover_log.filter(
+            (F.col("seq") > n + j * span) & (F.col("seq") <= n + (j + 1) * span)
+        ).write.parquet(d)
+        tdirs.append(d)
+    terr = open(os.path.join(work, "seq_T.stderr"), "w")
+    tproc = subprocess.Popen(
+        [sys.executable, me, "--seq-takeover", state, str(width), "T",
+         str(n_slices)] + tdirs,
+        env=env,
+        stdout=subprocess.PIPE,
+        stderr=terr,
+        text=True,
+    )
+    tout, _ = tproc.communicate(timeout=1200)
+    terr.close()
+    if tproc.returncode != 0:
+        raise SystemExit(
+            f"takeover writer crashed rc={tproc.returncode} — see {terr.name}"
+        )
+    trep = json.loads(tout.strip().splitlines()[-1])
+    if trep["commits"] != [n_slices, n_slices + 1]:
+        raise SystemExit(f"takeover writer did not land its batches: {trep}")
     wall = time.monotonic() - t0
 
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
@@ -419,7 +377,6 @@ def maintenance_main() -> None:
     state_dir, stopfile = sys.argv[2], sys.argv[3]
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.session import get_spark
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ArbiterUnavailableError,
         ConcurrentCommitError,
     )
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
@@ -435,10 +392,9 @@ def maintenance_main() -> None:
             folded += r["deltas_folded"]
             compacted += r["buckets_compacted"]
             expired += r["versions_expired"]
-        except (ConcurrentCommitError, ArbiterUnavailableError):
-            # lost race, or (under injected transport faults) an ambiguous
-            # maintenance commit — housekeeping reproduces the same
-            # logical state, so either way the next round reconverges
+        except ConcurrentCommitError:
+            # lost race — housekeeping reproduces the same logical
+            # state, so the next round reconverges
             conflicts += 1
         rounds += 1
         time.sleep(0.3)
@@ -513,7 +469,7 @@ def main() -> None:
         orders.filter(F.col("okey") % n_slices == j).drop("okey").write.parquet(d)
         slice_dirs.append(d)
 
-    env, mgr = _store_env(store)
+    env = dict(os.environ, SPARK_GRAFT_LOG_STORE=store)
     me = os.path.abspath(__file__)
 
     def launch(state_dir: str) -> tuple[list[dict], float]:
@@ -570,24 +526,17 @@ def main() -> None:
             outs.append(json.loads(mout.strip().splitlines()[-1]))
         return outs, time.monotonic() - t0
 
-    try:
+    reports, wall = launch(state)
+    total_conflicts = sum(r.get("conflicts", 0) for r in reports if "commits" in r)
+    attempt = 1
+    while total_conflicts == 0 and attempt < 3:
+        # clean split = vacuous race; re-run on a FRESH state path
+        attempt += 1
+        state = os.path.join(work, f"state_retry{attempt}")
         reports, wall = launch(state)
-        total_conflicts = sum(r.get("conflicts", 0) for r in reports if "commits" in r)
-        attempt = 1
-        while total_conflicts == 0 and attempt < 3:
-            # clean split = vacuous race; re-run on a FRESH state path —
-            # rmtree-and-reuse would deadlock the arbiter leg, whose
-            # server still holds the old path's committed names (seed()
-            # only adds) and would reject every fresh-basis CAS
-            attempt += 1
-            state = os.path.join(work, f"state_retry{attempt}")
-            reports, wall = launch(state)
-            total_conflicts = sum(
-                r.get("conflicts", 0) for r in reports if "commits" in r
-            )
-    finally:
-        if mgr is not None:
-            mgr.shutdown()
+        total_conflicts = sum(
+            r.get("conflicts", 0) for r in reports if "commits" in r
+        )
 
     maint_report = next((r for r in reports if "maint_rounds" in r), None)
     reports = [r for r in reports if "commits" in r]

@@ -11,17 +11,16 @@ the crash-recovery path every real producer runs — it has no record of
 which versions landed before the kill, so it resubmits ALL of them and
 the TABLE must deduplicate.
 
-Topology, per store leg (filelock AND the journal-durable HTTP arbiter —
-the two multi-process deployment transports):
+Topology (on the filelock store, whose lock file spans processes):
 
   1. producer P1 (own Spark driver process) submits versions 0..N-1 of
      app 'prod' via append_delta_batch_optimistic(producer_txn=...);
      the parent watches the manifests dir and SIGKILLs P1 as soon as K
      final manifests exist — with commits landing back-to-back the kill
-     has a real chance of landing inside a commit (staged file written,
-     CAS or finalize in flight). Whatever the kill's exact phase, P1's
-     progress report is LOST (SIGKILL, no flush) — exactly like a real
-     crashed producer.
+     has a real chance of landing inside a commit (delta dir written,
+     lock held or manifest publish in flight). Whatever the kill's exact
+     phase, P1's progress report is LOST (SIGKILL, no flush) — exactly
+     like a real crashed producer.
   2. producer P2 (second process, same app_id) replays versions 0..N-1
      from the start. PASS requires P2 to SKIP at least one version
      (high-water dedup engaged — if P1 died before its first commit the
@@ -34,7 +33,7 @@ the two multi-process deployment transports):
 PASS = the P2/P3 skip/commit split above, the recorded txn high-water
 == N-1, and the folded table equals the one-shot aggregate of all N
 slices BIT-EXACTLY (a double-applied batch would double its rows and
-break the fold; a dropped one would miss rows). The filelock leg runs
+break the fold; a dropped one would miss rows). The probe runs
 with SPARK_GRAFT_LOCK_TTL_MS=10000 so a kill that lands while P1 HOLDS
 the commit lock recovers via the TTL break-in inside the probe's
 budget instead of the 5-minute production default (same code path,
@@ -43,7 +42,7 @@ shorter wait).
 Prints one JSON line. Producer-subprocess mode (internal):
   ... --producer STATE_DIR WIDTH APP N_VERSIONS SLICE_DIR...
 
-Usage: python examples/producer_replay_probe.py SF_DIR [N_VERSIONS] [STORE|both]
+Usage: python examples/producer_replay_probe.py SF_DIR [N_VERSIONS]
 """
 
 from __future__ import annotations
@@ -85,7 +84,6 @@ def producer_main() -> None:
             range_width=width,
             stats=stats,
             producer_txn=(app, v),
-            outage_retry_s=60.0,
         )
         outcomes.append("skip" if got is None else got)
     print(
@@ -110,7 +108,7 @@ def _count_final_manifests(mdir: str) -> int:
     )
 
 
-def run_leg(sf_dir: str, store: str, n_versions: int) -> dict:
+def run_leg(sf_dir: str, n_versions: int) -> dict:
     from pyspark.sql import functions as F
 
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import load_table
@@ -118,7 +116,7 @@ def run_leg(sf_dir: str, store: str, n_versions: int) -> dict:
 
     spark = get_spark("producer-replay-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    work = f"/tmp/prod_replay_{store}_{os.path.basename(os.path.normpath(sf_dir))}_{int(time.time())}"
+    work = f"/tmp/prod_replay_filelock_{os.path.basename(os.path.normpath(sf_dir))}_{int(time.time())}"
     os.makedirs(work, exist_ok=True)
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -134,36 +132,12 @@ def run_leg(sf_dir: str, store: str, n_versions: int) -> dict:
         orders.filter(F.col("okey") % n_versions == v).drop("okey").write.parquet(d)
         slice_dirs.append(d)
 
-    # store wiring: filelock with a 10 s orphan TTL, or the DURABLE HTTP
-    # arbiter (fsync WAL) — the transport whose journalled record table
-    # must carry P1's commits to P2's process
-    srv = None
-    if store == "http":
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.http_arbiter import (
-            HttpArbiterServer,
-        )
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-            JournalledCommitArbiter,
-        )
-
-        token = f"probe-{os.getpid()}"
-        journal = os.path.join(work, "arbiter.journal.wal")
-        srv = HttpArbiterServer(
-            token, arbiter=JournalledCommitArbiter(journal)
-        ).start()
-        host, port = srv.address
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_LOG_STORE="arbiter",
-            SPARK_GRAFT_ARBITER_ENDPOINT=f"http://{host}:{port}",
-            SPARK_GRAFT_ARBITER_AUTHKEY=token,
-        )
-    else:
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_LOG_STORE="filelock",
-            SPARK_GRAFT_LOCK_TTL_MS="10000",
-        )
+    # filelock with a 10 s orphan TTL
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_LOG_STORE="filelock",
+        SPARK_GRAFT_LOCK_TTL_MS="10000",
+    )
     me = os.path.abspath(__file__)
 
     def spawn(tag: str, state: str):
@@ -188,8 +162,8 @@ def run_leg(sf_dir: str, store: str, n_versions: int) -> dict:
         p1, p1_err = spawn(f"p1_{attempt}", state)
         # vary the kill point across attempts AND runs (pid seed): after
         # the k-th final manifest appears, the commit loop is mid-flight
-        # somewhere between commits k and k+1 — staging, CAS, finalize
-        # or the inter-commit gap, depending on the race
+        # somewhere between commits k and k+1 — delta write, lock,
+        # publish or the inter-commit gap, depending on the race
         kill_at = 1 + ((attempt + os.getpid()) % max(1, n_versions - 2))
         deadline = time.monotonic() + 600
         while time.monotonic() < deadline:
@@ -227,61 +201,57 @@ def run_leg(sf_dir: str, store: str, n_versions: int) -> dict:
     t0 = time.monotonic()
     result = None
     attempt = 0
-    try:
-        while result is None and attempt < 6:
-            result = one_attempt(attempt)
-            attempt += 1
-        if result is None:
-            raise SystemExit(
-                "no attempt killed P1 strictly mid-log (always too early "
-                "or too late) — probe vacuous after 6 runs"
-            )
-        rep2, rep3, state = result
+    while result is None and attempt < 6:
+        result = one_attempt(attempt)
+        attempt += 1
+    if result is None:
+        raise SystemExit(
+            "no attempt killed P1 strictly mid-log (always too early "
+            "or too late) — probe vacuous after 6 runs"
+        )
+    rep2, rep3, state = result
 
-        # P3 is the dedup bookend: every version skips, head unmoved
-        if rep3["skips"] != n_versions or rep3["commits"]:
-            raise SystemExit(
-                f"full replay on the complete table was NOT fully "
-                f"deduplicated: {rep3} — double-apply"
-            )
-
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
-            _list_manifests,
-            _read_manifest,
-            read_latest_partitioned_state,
-            table_txns,
+    # P3 is the dedup bookend: every version skips, head unmoved
+    if rep3["skips"] != n_versions or rep3["commits"]:
+        raise SystemExit(
+            f"full replay on the complete table was NOT fully "
+            f"deduplicated: {rep3} — double-apply"
         )
 
-        newest = _read_manifest(spark, state, _list_manifests(spark, state)[-1])
-        high_water = table_txns(newest).get("prod")
-        if high_water != n_versions - 1:
-            raise SystemExit(
-                f"txn high-water {high_water} != {n_versions - 1} — the "
-                "replay lost or duplicated a version"
-            )
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
+        _list_manifests,
+        _read_manifest,
+        read_latest_partitioned_state,
+        table_txns,
+    )
 
-        got = read_latest_partitioned_state(spark, state)
-        want = (
-            orders.drop("okey")
-            .groupBy("key")
-            .agg(
-                F.sum(F.col("amount").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
+    newest = _read_manifest(spark, state, _list_manifests(spark, state)[-1])
+    high_water = table_txns(newest).get("prod")
+    if high_water != n_versions - 1:
+        raise SystemExit(
+            f"txn high-water {high_water} != {n_versions - 1} — the "
+            "replay lost or duplicated a version"
         )
-        n_mismatch = got.exceptAll(want).count() + want.exceptAll(got).count()
-        if n_mismatch:
-            raise SystemExit(
-                f"EXACTNESS FAILED on {store}: {n_mismatch} mismatching "
-                "rows — a batch was double-applied or lost across the kill"
-            )
-    finally:
-        if srv is not None:
-            srv.shutdown()
+
+    got = read_latest_partitioned_state(spark, state)
+    want = (
+        orders.drop("okey")
+        .groupBy("key")
+        .agg(
+            F.sum(F.col("amount").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total"),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+    )
+    n_mismatch = got.exceptAll(want).count() + want.exceptAll(got).count()
+    if n_mismatch:
+        raise SystemExit(
+            f"EXACTNESS FAILED: {n_mismatch} mismatching "
+            "rows — a batch was double-applied or lost across the kill"
+        )
     return {
-        "store": store,
+        "store": "filelock",
         "kill_attempts": attempt,
         "p2_skips": rep2["skips"],
         "p2_commits": rep2["commits"],
@@ -298,13 +268,11 @@ def main() -> None:
         return
     sf_dir = sys.argv[1]
     n_versions = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    store = sys.argv[3] if len(sys.argv) > 3 else "both"
-    legs = ["filelock", "http"] if store == "both" else [store]
     out = {
         "rung": "producer_replay_exactly_once",
         "sf_dir": sf_dir,
         "versions": n_versions,
-        "legs": [run_leg(sf_dir, leg, n_versions) for leg in legs],
+        "legs": [run_leg(sf_dir, n_versions)],
     }
     print(json.dumps(out))
 

@@ -250,6 +250,13 @@ def neardup_components(
         labels = new_labels.select("node", "label")
         if changed == 0:
             break
+    else:
+        # stopping short of the fixpoint would hand out partial labels
+        # (a component split in two) as if they were final
+        raise RuntimeError(
+            "neardup_components did not reach its fixpoint within "
+            f"max_iters={max_iters} rounds; raise max_iters"
+        )
     out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
     if ckey is not None:
         from .buildcache import memo_put
@@ -310,16 +317,21 @@ def _word_rows(documents: DataFrame) -> DataFrame:
     )
 
 
+def _top_vocab(word_counts: DataFrame, k: int = VOCAB_K) -> DataFrame:
+    """THE vocabulary definition over (word, tf, df) rows: the k words
+    with the highest df, ties broken by higher tf, then by word."""
+    return word_counts.orderBy(F.desc("df"), F.desc("tf"), F.asc("word")).limit(k)
+
+
 def vocab_topk(documents: DataFrame, k: int = VOCAB_K) -> DataFrame:
-    return (
+    return _top_vocab(
         _word_rows(documents)
         .groupBy("word")
         .agg(
             F.count(F.lit(1)).cast("long").alias("tf"),
             F.countDistinct("doc_id").cast("long").alias("df"),
-        )
-        .orderBy(F.desc("df"), F.desc("tf"), F.asc("word"))
-        .limit(k)
+        ),
+        k,
     )
 
 
@@ -884,16 +896,12 @@ def oov_rate(documents: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     tf = pin(tf, "oov_tf")
-    vocab = (
-        tf.groupBy("word")
-        .agg(
+    vocab = _top_vocab(
+        tf.groupBy("word").agg(
             F.sum("tf").cast("long").alias("tf"),
             F.count(F.lit(1)).cast("long").alias("df"),
         )
-        .orderBy(F.desc("df"), F.desc("tf"), F.asc("word"))
-        .limit(VOCAB_K)
-        .select(F.col("word").alias("vword"))
-    )
+    ).select(F.col("word").alias("vword"))
     joined = tf.join(F.broadcast(vocab), tf.word == vocab.vword, "left")
     return joined.groupBy("doc_id").agg(
         F.sum("tf").cast("long").alias("n_tokens"),

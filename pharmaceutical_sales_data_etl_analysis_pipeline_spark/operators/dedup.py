@@ -954,7 +954,7 @@ SPAN_K = 8  # tokens per fingerprinted window
 
 def substring_dedup_spans(documents: DataFrame, span_k: int = SPAN_K) -> DataFrame:
     toks = documents.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t")
+        "doc_id", ws_words_col(F.col("text")).alias("t")
     ).filter(F.size("t") >= span_k)
     # sequence(1, size-k+1) ascends because size >= k is pre-filtered
     # (sequence DESCENDS when end < start — the n=1 footgun)

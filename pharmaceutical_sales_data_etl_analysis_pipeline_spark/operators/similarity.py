@@ -1154,12 +1154,23 @@ _QUANTIZE_OUT = "vec_id long, scale double, codes string, max_abs_err double"
 
 
 def embedding_quantize(embeddings: DataFrame) -> DataFrame:
+    """Contract: every embedding has the same dimension (the table's
+    fixed embedding width). Each Arrow batch is quantized as one 2-D
+    array, so a batch holding vectors of different lengths raises
+    ValueError."""
+
     def quantize(batches):
         import numpy as np
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            dims = set(pdf["embedding"].map(len))
+            if len(dims) > 1:
+                raise ValueError(
+                    "embedding_quantize needs embeddings of one dimension; "
+                    f"got dimensions {sorted(dims)}"
+                )
             e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             scale = np.abs(e).max(axis=1) / 127.0
             # zero-vector guard: divide by 1 instead (codes come out 0,

@@ -46,10 +46,9 @@ def ws_tokens_col(t) -> F.Column:
 
 def ws_words_col(t) -> F.Column:
     """Lowercased whitespace-word array — THE canonical word tokenization
-    shared by every vocab/overlap/diversity/shingle consumer (10 call
-    sites across 5 modules; SQL twin: string_split_regex(lower(trim(x)),
-    '\\s+')). Centralized so a normalization tweak cannot silently
-    diverge word sets between ops."""
+    shared by every vocab/overlap/diversity/shingle/span consumer (SQL
+    twin: string_split_regex(lower(trim(x)), '\\s+')). Centralized so a
+    normalization tweak cannot silently diverge word sets between ops."""
     return F.split(F.lower(F.trim(t)), r"\s+")
 
 

@@ -67,13 +67,10 @@ InProcessConditionalPutLogStore makes the check+publish pair atomic
 (per-table lock), giving true exclusion for every topology whose
 commits share one driver process — Structured Streaming's actual
 shape; FileLockLogStore extends that across PROCESSES on filesystems
-with atomic create-if-absent (token-owned, TTL-bounded lock file);
-ArbiterLogStore carries multi-DRIVER object-store deployments — its
-compare-and-swap runs at an injectable external arbiter (the
-S3 If-None-Match / DynamoDB / catalog-service seam), two-phase with
-reader-side recovery. On S3A do not run the rename store multi-writer:
-its rename is copy+delete. (See logstore.py; contract property-tested
-across all four stores in tests/test_logstore.py.)
+with atomic create-if-absent (token-owned, TTL-bounded lock file).
+On S3A do not run the rename store multi-writer: its rename is
+copy+delete. (See logstore.py; contract property-tested across all
+three stores in tests/test_logstore.py.)
 
 Same read boundary as upsert.py: DECIMAL(18,2) in state, DOUBLE out.
 
@@ -139,11 +136,9 @@ from pyspark.sql import types as T
 
 from ..sources.maintenance import _fs_and_path
 from .logstore import (
-    ArbiterUnavailableError,
     ConcurrentCommitError,
     HadoopRenameLogStore,
     ManifestLogStore,
-    is_commit_not_found,
 )
 from .upsert import STATE_SCHEMA, _as_read_view
 
@@ -155,12 +150,11 @@ _RENAME_FENCE_WARNED: set[str] = set()
 
 # The commit-protocol seam (see logstore.py): every manifest list/read/
 # publish below routes through this store. The default is the plain-FS
-# optimistic rename; swap in InProcessConditionalPutLogStore (or an
-# external-arbiter implementation of ManifestLogStore) to make the
-# check+publish pair atomic — the table layer is contract-agnostic.
-# Deployments pick without code via SPARK_GRAFT_LOG_STORE =
-# rename | inprocess | filelock | arbiter (the same seam Delta exposes
-# as spark.delta.logStore.class).
+# optimistic rename; swap in InProcessConditionalPutLogStore or
+# FileLockLogStore to make the check+publish pair atomic — the table
+# layer is contract-agnostic. Deployments pick without code via
+# SPARK_GRAFT_LOG_STORE = rename | inprocess | filelock (the same seam
+# Delta exposes as spark.delta.logStore.class).
 
 
 def _default_log_store() -> ManifestLogStore:
@@ -172,16 +166,6 @@ def _default_log_store() -> ManifestLogStore:
         InProcessConditionalPutLogStore,
     )
 
-    if name == "arbiter":
-        # the multi-DRIVER deployment path: requires a running external
-        # arbiter endpoint (SPARK_GRAFT_ARBITER_ENDPOINT) — constructing
-        # a fresh in-memory CommitArbiter here would serialize only
-        # within this process, silently giving a deployment that chose
-        # 'arbiter' no cross-driver exclusion at all (ADVICE r8)
-        from .arbiter_server import arbiter_store_from_env
-
-        return arbiter_store_from_env()
-
     stores = {
         "rename": HadoopRenameLogStore,
         "inprocess": InProcessConditionalPutLogStore,
@@ -189,8 +173,7 @@ def _default_log_store() -> ManifestLogStore:
     }
     if name not in stores:
         raise ValueError(
-            f"unknown SPARK_GRAFT_LOG_STORE={name!r}; one of "
-            f"{sorted(stores) + ['arbiter']}"
+            f"unknown SPARK_GRAFT_LOG_STORE={name!r}; one of {sorted(stores)}"
         )
     return stores[name]()
 
@@ -1167,7 +1150,7 @@ def _require_seq_writer_fence(
                 "default HadoopRenameLogStore: its publish is not atomic, "
                 "so simultaneous foreign producers racing the same stale "
                 "listing are not excluded — set "
-                "SPARK_GRAFT_LOG_STORE=filelock|arbiter for multi-writer "
+                "SPARK_GRAFT_LOG_STORE=filelock for multi-writer "
                 "fencing guarantees",
                 state_dir,
             )
@@ -2935,10 +2918,8 @@ def append_delta_batch(
     takeover: bool = False,
     merge_schema: bool = False,
     expected_schema_version: int | None = None,
-    outage_retry_s: float = 0.0,
     lease_ttl_ms: int | None = None,
     producer_txn: tuple[str, int] | None = None,
-    stats: dict | None = None,
 ) -> bool:
     """Merge-on-read write path: commit one micro-batch as a DELTA file —
     no bucket is read or rewritten, so a uniformly scattered batch costs
@@ -2966,14 +2947,7 @@ def append_delta_batch(
     `merge_schema`/`expected_schema_version`: ADD-COLUMN evolution and
     the stale-schema writer fence (see the table-schema section above).
     An evolved append writes its delta under the NEW schema; older delta
-    and bucket files are never rewritten — readers back-fill NULL.
-
-    `outage_retry_s` (arbiter deployments): how long to keep retrying
-    the ambiguity RECONCILIATION when the commit outcome is unknown and
-    the arbiter is unreachable (service blip or restart). 0 = fail-stop
-    immediately (default; the checkpointed streamed writer resolves on
-    replay). See _reconcile_with_outage_retry for why the retry target
-    is the reconciliation, never the append itself."""
+    and bucket files are never rewritten — readers back-fill NULL."""
     listing_snapshot = tuple(_list_manifests(spark, state_dir))
     if expect_new and any(_batch_id_of(v) == batch_id for v in listing_snapshot):
         raise ConcurrentCommitError(
@@ -3066,198 +3040,8 @@ def append_delta_batch(
         manifest["writer_id"] = writer_id
     elif prev and "writer_id" in prev:
         manifest["writer_id"] = prev["writer_id"]  # keep the fence intact
-    try:
-        _write_manifest(spark, state_dir, manifest, expected=listing_snapshot)
-    except ArbiterUnavailableError as err:
-        # observability (r13): an AMBIGUOUS publish (response lost; the
-        # commit may or may not have landed) that the attempt-exact
-        # reconciliation RESOLVED — either way: verified-committed
-        # (return) or verified-not-committed (the retry-safe
-        # ConcurrentCommitError). The arbiter-failover probe asserts on
-        # this counter. Unresolved ambiguities raise
-        # ArbiterUnavailableError and are NOT counted.
-        try:
-            _reconcile_with_outage_retry(
-                spark, state_dir, batch_id, vname, err, outage_retry_s
-            )
-        except ConcurrentCommitError:
-            if stats is not None:
-                stats["ambiguities_resolved"] = (
-                    stats.get("ambiguities_resolved", 0) + 1
-                )
-            raise
-        if stats is not None:
-            stats["ambiguities_resolved"] = (
-                stats.get("ambiguities_resolved", 0) + 1
-            )
+    _write_manifest(spark, state_dir, manifest, expected=listing_snapshot)
     return True
-
-
-def _reconcile_with_outage_retry(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    vname: str,
-    err: ArbiterUnavailableError,
-    outage_retry_s: float,
-) -> None:
-    """Resolve an ambiguous publish, retrying the RECONCILIATION (never
-    the append) while the arbiter is down — the writer behavior a real
-    service blip or restart needs. Blindly re-appending after an
-    unresolved ambiguity double-appends whenever the lost attempt had in
-    fact committed (e.g. finalize ran, the mark_complete ack was lost);
-    re-running _reconcile_ambiguous_append for the EXACT attempt vname
-    is idempotent and converges to committed / retry-safe-conflict once
-    the service answers.
-
-    Terminal-unknowable verdicts (same-id compaction, vanished same-id
-    manifest, below the retention keep window) re-raise the ORIGINAL
-    error object; retrying those would re-derive the same verdict, so
-    they propagate immediately — distinguished by object identity from
-    a FRESH ArbiterUnavailableError raised by the store while the
-    reconciliation itself was reading (arbiter still down), which is
-    the retryable case."""
-    import time as _time
-
-    deadline = _time.monotonic() + outage_retry_s
-    while True:
-        try:
-            _reconcile_ambiguous_append(spark, state_dir, batch_id, vname, err)
-            return
-        except ArbiterUnavailableError as still:
-            if still is err:
-                # terminal verdict: mark it so no outer retry loop ever
-                # mistakes it for a transient read failure and re-appends
-                # a batch that may already be folded into the base
-                still.terminal_ambiguity = True
-                raise
-            if _time.monotonic() >= deadline:
-                raise
-            _LOG.warning(
-                "arbiter unavailable during ambiguity reconciliation of "
-                "batch %s in %s — retrying (%s)",
-                batch_id,
-                state_dir,
-                still,
-            )
-            _time.sleep(min(1.0, max(0.1, outage_retry_s / 30)))
-
-
-def _reconcile_ambiguous_append(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    vname: str,
-    err: ArbiterUnavailableError,
-) -> None:
-    """Resolve an AMBIGUOUS commit outcome on the arbiter path: the
-    transport failed mid-call, so the CAS may or may not have been
-    applied server-side (a real conditional-put service can apply the
-    write and lose the response — modeled by FaultInjectingArbiter's
-    fail_after). Deleting state or blindly retrying would both be wrong;
-    instead, re-list (which runs the reader self-heal, finishing any
-    CAS-won-but-unfinalized commit — possibly OURS) and inspect the
-    manifest that actually holds this batch id:
-
-    - it exists and references OUR attempt-unique delta dir -> the commit
-      WON; return success (exactly-once, no duplicate append);
-    - it exists referencing someone else's attempt -> we definitively
-      lost to a foreign writer; ConcurrentCommitError (safe to retry
-      with a fresh basis — nothing of ours was recorded);
-    - no manifest for this batch id after self-heal -> the request never
-      reached the arbiter; ConcurrentCommitError (equally safe to
-      retry — the optimistic loop re-lists and re-attempts).
-
-    If the reconciliation read ITSELF fails (arbiter still down), the
-    original error propagates — fail-stop, resolve on the next replay.
-    That includes PER-MANIFEST reads inside the scan: only a store
-    NOT-FOUND (concurrent vacuum) may be skipped; any other read failure
-    leaves that manifest's delta list unknown — it might name our
-    attempt — so treating it as vacuumed could double-append (ADVICE
-    r10). Two more unknowable negatives fail-stop for the same reason:
-    a SAME-ID manifest that vanished between listing and read, and a
-    batch id that has fallen below the retention keep window (plain
-    manifests are deleted wholesale there, with no same-id 'x' commit
-    left to prove anything).
-
-    The positive proof scans EVERY current manifest's delta list, newest
-    first, not just the newest same-id commit: a concurrent COMPACTION
-    can supersede our won manifest with an empty-delta 'x' commit, and a
-    LATER batch's manifest inherits our delta name — either would make a
-    newest-same-id-only check misread a won commit as foreign and let
-    the optimistic loop append the batch TWICE (caught by review in
-    r10). Conversely, when same-id commits exist, none list our attempt,
-    and one is a compaction, the outcome stays unknowable (our delta may
-    be folded and its plain manifest vacuumed) — re-raise the original
-    error rather than guess."""
-    versions = _list_manifests(spark, state_dir)  # triggers self-heal
-    vanished: set[str] = set()
-    for v in reversed(versions):
-        try:
-            m = _read_manifest(spark, state_dir, v)
-        except Exception as read_err:
-            if is_commit_not_found(read_err):
-                # vacuumed between the listing and this read (concurrent
-                # retention): genuinely absent. Recorded, not ignored —
-                # a vanished SAME-ID manifest may have listed our attempt,
-                # so the negative branches below must treat it as
-                # unknowable, not as foreign
-                vanished.add(v)
-                continue
-            # ANY OTHER read failure (FS hiccup, arbiter still flaking —
-            # exactly the regime this function runs in) leaves this
-            # manifest's delta list UNKNOWN; it may reference our own
-            # attempt, so falling through to "nothing landed — retry"
-            # could publish the batch a second time (ADVICE r10).
-            # Fail-stop as a FRESH unavailability (never `raise err`
-            # itself — object identity marks TERMINAL verdicts for
-            # _reconcile_with_outage_retry, and a transient read flake is
-            # the retryable case, not a terminal one): re-running the
-            # reconciliation is idempotent and resolves once reads work.
-            raise ArbiterUnavailableError(
-                f"manifest {v} unreadable during ambiguity reconciliation "
-                f"of batch {batch_id} in {state_dir} ({read_err}); original "
-                f"ambiguity: {err}"
-            ) from read_err
-        if vname in m.get("deltas", []):
-            _LOG.warning(
-                "ambiguous arbiter outcome for batch %s in %s reconciled "
-                "as COMMITTED (own attempt %s found in manifest %s): %s",
-                batch_id,
-                state_dir,
-                vname,
-                v,
-                err,
-            )
-            return
-    same_id = [v for v in versions if _batch_id_of(v) == batch_id]
-    if same_id:
-        if any("x" in v for v in same_id) or any(v in vanished for v in same_id):
-            # a compaction already superseded this batch id (our delta may
-            # have been folded and its plain manifest vacuumed), or a
-            # same-id manifest vanished before we could read its delta
-            # list (it may have been OURS, mid-vacuum) — neither COMMITTED
-            # nor LOST is provable; fail stop
-            raise err
-        raise ConcurrentCommitError(
-            f"batch id {batch_id} in {state_dir} was committed by a "
-            f"foreign attempt while our publish failed ambiguously "
-            f"({err}); retry with a fresh basis"
-        ) from err
-    if versions and batch_id < _batch_id_of(versions[0]):
-        # the batch id has fallen OUT of the retention keep window:
-        # expire_partitioned_versions deletes plain manifests wholesale
-        # once their batch id leaves the newest-`keep` set — no same-id
-        # 'x' commit remains to route into the compaction branch above,
-        # so an empty same_id no longer proves "nothing landed"; our
-        # commit may have WON, been folded, and been vacuumed. Fail stop
-        # rather than retry into a double-append (ADVICE r10).
-        raise err
-    raise ConcurrentCommitError(
-        f"publish of batch {batch_id} in {state_dir} failed before the "
-        f"arbiter recorded it ({err}); nothing landed — retry with a "
-        "fresh basis"
-    ) from err
 
 
 def append_delta_batch_optimistic(
@@ -3267,7 +3051,6 @@ def append_delta_batch_optimistic(
     range_width: int | None = None,
     max_attempts: int = 20,
     stats: dict | None = None,
-    outage_retry_s: float = 0.0,
     producer_txn: tuple[str, int] | None = None,
 ) -> int | None:
     """MULTI-WRITER merge-on-read append: allocate the next batch id from
@@ -3295,10 +3078,9 @@ def append_delta_batch_optimistic(
     carries a per-app high-water version map, a submission whose
     version is <= the recorded mark is SKIPPED (returns None, nothing
     written), and the check re-runs against the refreshed basis after
-    every lost race — so a crashed-and-resubmitted batch, or one whose
-    first attempt resolved ambiguously, applies at most once even
-    across writer processes. Versions must increase monotonically per
-    app_id; the map rides every manifest (maintenance commits inherit
+    every lost race — so a crashed-and-resubmitted batch applies at
+    most once even across writer processes. Versions must increase
+    monotonically per app_id; the map rides every manifest (maintenance commits inherit
     it like the writer lease). A lost race leaves that attempt's delta dir as
     debris — the same retention-reclaimed orphan class as a crashed
     writer's; the committed manifest never references it. The refreshed basis on each retry is
@@ -3318,7 +3100,7 @@ def append_delta_batch_optimistic(
             "append_delta_batch_optimistic requires an atomic commit "
             "store; the default HadoopRenameLogStore's check-then-rename "
             "can publish two same-id manifests under a race. Set "
-            "SPARK_GRAFT_LOG_STORE=filelock|inprocess|arbiter (or "
+            "SPARK_GRAFT_LOG_STORE=filelock|inprocess (or "
             "set_log_store(...)) for multi-writer tables"
         )
     if "seq" in batch_df.columns:
@@ -3341,12 +3123,7 @@ def append_delta_batch_optimistic(
     import time as _time
 
     last_err: ConcurrentCommitError | None = None
-    deadline = _time.monotonic() + outage_retry_s
     conflicts = 0
-    # conflicts consume max_attempts; outage retries consume ONLY the
-    # time budget — counting them against max_attempts would cap outage
-    # riding at ~max_attempts seconds regardless of outage_retry_s and
-    # then blame "commit races" that never happened
     while conflicts < max_attempts:
         try:
             versions = _list_manifests(spark, state_dir)
@@ -3368,9 +3145,7 @@ def append_delta_batch_optimistic(
                 next_id,
                 range_width,
                 expect_new=True,
-                outage_retry_s=outage_retry_s,
                 producer_txn=producer_txn,
-                stats=stats,
             )
             if not committed:
                 # the inner append's own (fresher) basis showed the txn
@@ -3390,35 +3165,13 @@ def append_delta_batch_optimistic(
             # all 20 attempts while only 32 commits existed. Full jitter
             # (AWS-style: sleep ~ U[0, min(cap, base·2^k)]) desynchronizes
             # the herd; the cap keeps the worst single wait at 1.6 s.
-            # Losing a race is DEFINITE (the arbiter answered), so the
+            # Losing a race is DEFINITE (the store answered), so the
             # sleep risks no double-apply — it only spaces the retries.
             # At cluster scale contention grows with writer count, which
             # makes backoff more load-bearing, not less.
             import random as _random
 
             _time.sleep(_random.uniform(0.0, min(1.6, 0.05 * (2 ** min(conflicts, 5)))))
-            continue
-        except ArbiterUnavailableError as exc:
-            # Retrying here is SAFE only because the inner append already
-            # exhausted its own reconciliation-retry budget for any
-            # attempt that actually reached the arbiter (see
-            # _reconcile_with_outage_retry) — the inner deadline starts
-            # AFTER ours, so by the time an unresolved ambiguity
-            # propagates to this handler our budget is spent too and we
-            # re-raise rather than risk re-appending a maybe-committed
-            # batch. Terminal-unknowable verdicts carry an explicit
-            # marker and are never retried. What this handler actually
-            # retries is the READ-ONLY failures: the basis listing, or a
-            # commit the store raised on before anything was recorded.
-            if (
-                getattr(exc, "terminal_ambiguity", False)
-                or outage_retry_s <= 0
-                or _time.monotonic() >= deadline
-            ):
-                raise
-            if stats is not None:
-                stats["outage_retries"] = stats.get("outage_retries", 0) + 1
-            _time.sleep(min(1.0, max(0.1, outage_retry_s / 30)))
             continue
     raise ConcurrentCommitError(
         f"lost {max_attempts} consecutive commit races in {state_dir}"

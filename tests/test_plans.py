@@ -297,6 +297,38 @@ def test_neardup_components_partitioning_scales_with_edges(spark, sf_dir):
     assert sorted(map(tuple, fanned.collect())) == sorted(map(tuple, default.collect()))
 
 
+def test_neardup_components_fails_loudly_short_of_fixpoint(spark):
+    """Worst-case diameter: a chain of near-duplicate documents (each
+    shares 15 of 20 words with the next, 10 with the one after) whose
+    candidate graph is the path 0-1-...-7. Too few rounds must raise,
+    never return partial labels; the default converges to the minimum
+    doc_id of the one component."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.corpusops import (
+        COMPONENT_MIN_J,
+        minhash_lsh_candidates,
+        neardup_components,
+    )
+
+    n_docs, width, step = 8, 20, 5
+    words = [f"word{j}" for j in range(n_docs * step + width)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[i * step : i * step + width])) for i in range(n_docs)],
+        "doc_id long, text string",
+    )
+    edges = {
+        (r["doc_a"], r["doc_b"])
+        for r in minhash_lsh_candidates(docs)
+        .filter(F.col("est_jaccard") >= COMPONENT_MIN_J)
+        .collect()
+    }
+    assert edges == {(i, i + 1) for i in range(n_docs - 1)}
+
+    with pytest.raises(RuntimeError, match="max_iters=1 rounds"):
+        neardup_components(docs, max_iters=1)
+    got = {r["doc_id"]: r["component"] for r in neardup_components(docs).collect()}
+    assert got == {i: 0 for i in range(n_docs)}
+
+
 def test_kmeans_assignment_is_zero_shuffle_projection(spark, sf_dir):
     """The clustering assignment pass compiles centroids into literals:
     the final plan must be scan + projection — no join, no shuffle. (The

@@ -5,6 +5,7 @@ createDataFrame), with example counts kept small."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -537,48 +538,73 @@ def test_table_diff_labels_exactly(spark, amended, removed, added):
     assert got == want
 
 
-@SETTLE
-@given(
-    vecs=st.lists(
+# one dimension per example: embedding_quantize's contract is a fixed
+# embedding width (vectors of unequal length in one batch raise)
+_DIM_AND_VECS = st.integers(4, 8).flatmap(
+    lambda dim: st.tuples(
+        st.just(dim),
         st.lists(
-            # map (not filter) tiny magnitudes away from zero: the scale
-            # must be nonzero, and filtering trips the health check
-            st.floats(-8, 8, allow_nan=False, width=32).map(
-                lambda x: x if abs(x) > 1e-3 else x + 0.5
+            st.lists(
+                # map (not filter) tiny magnitudes away from zero: the scale
+                # must be nonzero, and filtering trips the health check
+                st.floats(-8, 8, allow_nan=False, width=32).map(
+                    lambda x: x if abs(x) > 1e-3 else x + 0.5
+                ),
+                min_size=dim,
+                max_size=dim,
             ),
-            min_size=4,
-            max_size=8,
+            min_size=1,
+            max_size=15,
         ),
-        min_size=1,
-        max_size=15,
     )
 )
-def test_embedding_quantize_error_bound(spark, vecs):
-    """int8 scalar quantization: reconstruction error never exceeds half a
-    quantization step (scale/2), and codes stay within int8 range."""
-    from pyspark.sql import types as T
 
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.similarity import (
-        embedding_quantize,
-    )
 
+def _quantize_input(spark, rows):
     schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
             T.StructField("embedding", T.ArrayType(T.FloatType())),
         ]
     )
+    return spark.createDataFrame(rows, schema)
+
+
+@SETTLE
+@given(dim_and_vecs=_DIM_AND_VECS)
+def test_embedding_quantize_error_bound(spark, dim_and_vecs):
+    """int8 scalar quantization: reconstruction error never exceeds half a
+    quantization step (scale/2), and codes stay within int8 range."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.similarity import (
+        embedding_quantize,
+    )
+
+    dim, vecs = dim_and_vecs
     # always include the all-zero edge vector (scale = 0 must not NaN/throw)
-    rows = list(enumerate(vecs)) + [(9999, [0.0] * 4)]
-    df = spark.createDataFrame(rows, schema)
-    out = embedding_quantize(df).collect()
+    rows = list(enumerate(vecs)) + [(9999, [0.0] * dim)]
+    out = embedding_quantize(_quantize_input(spark, rows)).collect()
     zero = next(r for r in out if r["vec_id"] == 9999)
     assert zero["scale"] == 0.0 and zero["max_abs_err"] == 0.0
     assert set(zero["codes"].split(",")) == {"0"}
     for r in out:
         codes = [int(c) for c in r["codes"].split(",")]
+        assert len(codes) == dim
         assert all(-127 <= c <= 127 for c in codes)
         assert r["max_abs_err"] <= r["scale"] / 2 + 1e-9
+
+
+def test_embedding_quantize_rejects_ragged_dimensions(spark):
+    """Vectors of unequal length in one batch fail with the contract's
+    ValueError, not a numpy shape error."""
+    from pyspark.errors import PythonException
+
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.similarity import (
+        embedding_quantize,
+    )
+
+    df = _quantize_input(spark, [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0] * 5)])
+    with pytest.raises(PythonException, match=r"one dimension; got dimensions \[4, 5\]"):
+        embedding_quantize(df.coalesce(1)).collect()
 
 
 @SETTLE
